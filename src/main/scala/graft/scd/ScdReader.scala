@@ -98,9 +98,10 @@ object ScdReader {
     * resolves `.updates` relative to EACH split's directory, so a
     * Hive-partitioned table carries an independent DML log per
     * partition). A partition's statements are compiled with the
-    * partition predicate ANDed in, so the whole replay is still ONE
-    * narrow scan — no per-partition union, and pruning on partition
-    * columns passes through.
+    * partition predicate ANDed in, and every log's statements fuse
+    * into the one replay, so the whole read is still ONE narrow scan —
+    * no per-partition union, and pruning on partition columns passes
+    * through.
     *
     * Cross-log composition order: with a SINGLE (root) log — the
     * reference's own shape — statements replay in pure file order
@@ -121,14 +122,7 @@ object ScdReader {
       val scdTime = ScdTime.resolve(asOf, confTime(spark))
       if (sidecars.length == 1 && sidecars.head._1.isEmpty)
         ScdCompiler(base, UpdatesParser.parse(sidecars.head._2, scdTime))
-      else {
-        val merged = mergedStatements(sidecars, scdTime)
-        ScdCompiler.guardReplaySize(base, merged.size)
-        merged.foldLeft(base) {
-          case (df, (None, stmt)) => ScdCompiler.applyOne(df, stmt)
-          case (df, (Some(g), stmt)) => ScdCompiler.applyOne(df, stmt, g)
-        }
-      }
+      else ScdCompiler.guarded(base, mergedStatements(sidecars, scdTime))
     }
   }
 
@@ -248,7 +242,7 @@ object ScdReader {
     *
     * The union has one branch per DISTINCT statement time — statement
     * logs are small (driver-parsed), so plan size stays O(#times); each
-    * branch is the usual narrow compiled replay over the same scan. */
+    * branch is the usual fused replay over the same scan. */
   def historyText(
       spark: SparkSession,
       base: DataFrame,
@@ -292,10 +286,8 @@ object ScdReader {
       ScdCompiler.guardReplaySize(base, merged.size)
       val times = (0L +: merged.map(_._2.timeMillis)).distinct.sorted
       val snapshots = times.zipWithIndex.map { case (t, i) =>
-        val asOf = merged.filter(_._2.timeMillis <= t).foldLeft(base) {
-          case (df, (None, stmt)) => ScdCompiler.applyOne(df, stmt)
-          case (df, (Some(g), stmt)) => ScdCompiler.applyOne(df, stmt, g)
-        }
+        val asOf = ScdCompiler.guarded(base,
+          merged.filter(_._2.timeMillis <= t))
         val validTo =
           if (i + 1 < times.length) functions.lit(times(i + 1))
           else functions.lit(null).cast("long")

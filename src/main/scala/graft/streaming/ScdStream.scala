@@ -778,9 +778,9 @@ object ScdStream {
     * is visible only once its commit marker lands.
     *
     * Scale shape: the statement fold is [[graft.scd.ScdCompiler]]'s
-    * narrow projection chain over the previous snapshot — one
-    * distributed parquet read + write per trigger, no shuffle; the
-    * statements themselves are KB-scale driver metadata. */
+    * fused replay over the previous snapshot — one distributed parquet
+    * read + write per trigger, no shuffle; the statements themselves
+    * are KB-scale driver metadata. */
   def materializeFromLog(spark: SparkSession, tableDir: String,
       snapshotDir: String, checkpointDir: String,
       format: String = "parquet")

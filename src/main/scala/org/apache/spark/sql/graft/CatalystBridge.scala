@@ -1,16 +1,16 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.TryEval
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, CommonExpressionRef, Expression, TryEval, With}
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, LocalRelation, Project}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Minimal access shim into `private[sql]` Catalyst plumbing (hence the
   * `org.apache.spark.sql` subpackage — the standard extension-library
-  * pattern). Used only for the reference-compat error policy: Spark has
-  * `try_add`/`try_divide`/… but no GENERIC try-wrapper in the public
-  * API, while Catalyst's `TryEval` is exactly that (it is what the
-  * `try_*` family wraps).
+  * pattern): native expressions wrapped as Columns, the generic
+  * `TryEval` try-wrapper the public API lacks, and the plan pieces the
+  * fused SCD replay is built from.
   */
 object CatalystBridge {
 
@@ -19,16 +19,47 @@ object CatalystBridge {
   def tryEval(c: Column): Column =
     ExpressionUtils.column(TryEval(ExpressionUtils.expression(c)))
 
-  /** Wrap `c` so the pair (errored, value) is observable: a genuine
-    * NULL value stays distinguishable from an evaluation error because
-    * the struct wrapper is only NULL when evaluation raised. */
-  def tryStruct(c: Column): Column = tryEval(struct(c.as("v")))
+  /** Make ANALYZED expressions over `input` evaluable outside any plan
+    * (the fused SCD replay keeps its statements out of the plan): the
+    * optimizer's own Finish Analysis batch — RuntimeReplaceable →
+    * replacement, current time/user → literals, … — over a Project on
+    * `input`, then every `With` common-expression definition inlined
+    * at its references (the rewrite that otherwise adds a Project). */
+  def finishAnalysis(spark: SparkSession, exprs: Seq[Expression],
+      input: Seq[Attribute]): Seq[Expression] = {
+    val plan = Project(
+      exprs.zipWithIndex.map { case (e, i) => Alias(e, s"_$i")() },
+      LocalRelation(input))
+    val finished = spark.sessionState.optimizer.FinishAnalysis(plan)
+    finished.expressions.map {
+      case Alias(e, _) => e.transformUp {
+        case With(child, defs) =>
+          val byId = defs.map(d => d.id -> d.child).toMap
+          child.transformUp {
+            case r: CommonExpressionRef if byId.contains(r.id) => byId(r.id)
+          }
+      }
+    }
+  }
 
-  /** TRUE iff evaluating `c` raises at runtime. */
-  def evalFails(c: Column): Column = isnull(tryStruct(c))
+  /** `df` plus column `name` = `e`, appended by a one-projection
+    * `Expand` instead of a `Project`. Catalyst pushes a filter on
+    * `df`'s own columns through an Expand (so it still reaches the
+    * scan) but keeps a filter that reads `name` above it, and never
+    * inlines `e` into another operator — `e` is evaluated once per row
+    * (a Project alias would be copied into every filter pushed through
+    * it). Column pruning drops `name` when nothing reads it. */
+  def appendOnce(df: org.apache.spark.sql.Dataset[_], e: Expression,
+      name: String): DataFrame = {
+    val child = df.queryExecution.analyzed
+    val out = AttributeReference(name, e.dataType, e.nullable)()
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      Expand(Seq(child.output :+ e), child.output :+ out, child))
+  }
 
-  /** `c`'s value, or NULL if evaluation raises. */
-  def safeValue(c: Column): Column = tryStruct(c).getField("v")
+  /** A Column over a resolved Catalyst expression. */
+  def columnOf(e: Expression): Column = ExpressionUtils.column(e)
 
   /** Native codegen'd Σ aᵢ·bᵢ (see graft.functions.expressions
     * [[graft.functions.expressions.DotProduct]]). */

@@ -5,13 +5,12 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** The large-log replay guard (VERDICT r16 #4): k statements compile
-  * to k chained projections whose ANALYZER cost is superlinear
-  * (measured: 1.8 s @ 100, 19.6 s @ 1 000, driver StackOverflowError
-  * near 3 000 — SCALE.md r17 decade table). The guard turns the cliff
-  * into a loud, actionable error naming the reference's own remedy
-  * (compact + truncate), overridable by conf for users who accept the
-  * plan tax knowingly. */
+/** The large-log replay guard (VERDICT r16 #4): an uncompacted log
+  * makes every read pay a plan build linear in its length (see the
+  * decade table on [[ScdCompiler.MaxReplayStatementsConf]]). The guard
+  * turns that into a loud, actionable error naming the reference's own
+  * remedy (compact + truncate), overridable by conf for users who
+  * accept the plan tax knowingly. */
 class ReplaySizeGuardSpec extends SparkSpec {
 
   private def logOf(k: Int): String =

@@ -114,46 +114,55 @@ class UpdatesPropertySpec extends SparkSpec {
   private val schema = StructType(Seq(
     StructField("a", IntegerType), StructField("b", IntegerType)))
 
-  /** simulate one statement on (a, b) rows with the restricted
-    * generator grammar above */
-  private def evalExpr(e: String, a: Int, b: Int): Int = e match {
-    case "a + 1" => a + 1
-    case "b * 2" => b * 2
-    case "7" => 7
-    case "a - b" => a - b
+  /** a nullable (a, b) row */
+  private type R = (Option[Int], Option[Int])
+
+  /** simulate one SET right-hand side with the restricted generator
+    * grammar above, including the write-back cast into INT */
+  private def evalExpr(e: String, a: Option[Int], b: Option[Int]): Option[Int] = e match {
+    case "a + 1" => a.map(_ + 1)
+    case "b * 2" => b.map(_ * 2)
+    case "7" => Some(7)
+    case "a - b" => for (x <- a; y <- b) yield x - y
     case "'x--y'" => sys.error("string into int column not simulated")
-    case "abs(b)" => math.abs(b)
+    case "abs(b)" => b.map(math.abs)
+    // decimal product cast back to INT truncates toward zero
+    case "b * 1.5" => b.map(y => (BigDecimal(y) * BigDecimal("1.5")).toInt)
+    case "'12'" => Some(12)
   }
 
-  private def evalWhere(w: Option[String], a: Int, b: Int): Boolean = w match {
+  /** SQL three-valued logic: a statement fires only on TRUE, so any
+    * NULL operand means "does not fire" */
+  private def evalWhere(w: Option[String], a: Option[Int], b: Option[Int]): Boolean = w match {
     case None => true
-    case Some("a > 3") => a > 3
-    case Some("b = 0") => b == 0
-    case Some("a % 2 = 1") => a % 2 == 1
-    case Some("a > 1 AND b < 5") => a > 1 && b < 5
+    case Some("a > 3") => a.exists(_ > 3)
+    case Some("b = 0") => b.contains(0)
+    case Some("a % 2 = 1") => a.exists(_ % 2 == 1)
+    case Some("a > 1 AND b < 5") => a.exists(_ > 1) && b.exists(_ < 5)
     case Some(other) => sys.error(s"unsimulated: $other")
   }
 
-  private def simulate(rows: Seq[(Int, Int)],
-      stmts: Seq[ScdStatement]): Seq[(Int, Int)] =
+  private def simulate(rows: Seq[R], stmts: Seq[ScdStatement],
+      guard: R => Boolean = _ => true): Seq[R] =
     stmts.foldLeft(rows) { (rs, s) =>
       s match {
         case ScdUpdate(_, sets, where, _) =>
-          rs.map { case (a, b) =>
-            if (!evalWhere(where, a, b)) (a, b)
-            else sets.foldLeft((a, b)) { case ((na, nb), (c, e)) =>
+          rs.map { case r @ (a, b) =>
+            if (!guard(r) || !evalWhere(where, a, b)) r
+            else sets.foldLeft(r) { case ((na, nb), (c, e)) =>
               // all RHS see PRE-statement values (a, b)
               val v = evalExpr(e, a, b)
               if (c == "a") (v, nb) else (na, v)
             }
           }
         case ScdDelete(_, where, _) =>
-          rs.filterNot { case (a, b) => evalWhere(where, a, b) }
+          rs.filterNot { case r @ (a, b) => guard(r) && evalWhere(where, a, b) }
       }
     }
 
   private val genIntLog: Gen[List[ScdStatement]] = {
-    val intExpr = Gen.oneOf("a + 1", "b * 2", "7", "a - b", "abs(b)")
+    val intExpr = Gen.oneOf("a + 1", "b * 2", "7", "a - b", "abs(b)",
+      "b * 1.5", "'12'")
     val upd = for {
       nSets <- Gen.chooseNum(1, 2)
       cols <- Gen.pick(nSets, Seq("a", "b"))
@@ -165,36 +174,60 @@ class UpdatesPropertySpec extends SparkSpec {
       Gen.listOfN(n, Gen.frequency(3 -> upd, 1 -> del)))
   }
 
-  private val genRows: Gen[List[(Int, Int)]] =
-    Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n,
-      Gen.zip(Gen.chooseNum(-5, 9), Gen.chooseNum(-5, 9))))
+  private val genRows: Gen[List[R]] = {
+    val v = Gen.option(Gen.chooseNum(-5, 9))
+    Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n, Gen.zip(v, v)))
+  }
+
+  private def frame(rows: Seq[R]) = spark.createDataFrame(
+    rows.map { case (a, b) =>
+      Row(a.map(Int.box).orNull, b.map(Int.box).orNull) }.asJava, schema)
+
+  private def sorted(df: org.apache.spark.sql.DataFrame): Seq[R] =
+    df.collect().map(r => (Option.when(!r.isNullAt(0))(r.getInt(0)),
+      Option.when(!r.isNullAt(1))(r.getInt(1)))).toSeq.sortBy(_.toString)
+
+  /** the replay's interpreted fallback (no whole-stage or expression
+    * codegen) */
+  private def interpreted[T](body: => T): T = {
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try body
+    finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
 
   test("property: compiled replay == scala simulator (sequential composition)") {
     forAll(Gen.zip(genRows, genIntLog), n = 15) { case (rows, stmts) =>
-      val df = spark.createDataFrame(
-        rows.map { case (a, b) => Row(a, b) }.asJava, schema)
-      val got = ScdCompiler(df, stmts).collect()
-        .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
-      assert(got == simulate(rows, stmts).sorted)
+      val want = simulate(rows, stmts).sortBy(_.toString)
+      assert(sorted(ScdCompiler(frame(rows), stmts)) == want)
+      if (stmts.size % 2 == 1)
+        assert(interpreted(sorted(ScdCompiler(frame(rows), stmts))) == want)
+    }
+  }
+
+  test("property: guarded replay == simulator with the guard on every statement") {
+    import org.apache.spark.sql.functions.col
+    forAll(Gen.zip(genRows, genIntLog), n = 8) { case (rows, stmts) =>
+      // the guard reads the CURRENT row, like a statement predicate; a
+      // NULL guard never fires
+      val got = sorted(ScdCompiler(frame(rows), stmts, col("b") >= 0))
+      assert(got == simulate(rows, stmts, _._2.exists(_ >= 0)).sortBy(_.toString))
     }
   }
 
   test("property: compat error policy ≡ default when no expression errors") {
     forAll(Gen.zip(genRows, genIntLog), n = 10) { case (rows, stmts) =>
-      val df = spark.createDataFrame(
-        rows.map { case (a, b) => Row(a, b) }.asJava, schema)
-      val dflt = ScdCompiler(df, stmts).collect()
-        .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
-      val compat = ScdCompiler.compat(df, stmts).collect()
-        .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
-      assert(compat == dflt)
+      val df = frame(rows)
+      assert(sorted(ScdCompiler.compat(df, stmts)) == sorted(ScdCompiler(df, stmts)))
     }
   }
 
   test("property: empty log is identity; unconditional DELETE empties") {
     forAll(genRows, n = 8) { rows =>
-      val df = spark.createDataFrame(
-        rows.map { case (a, b) => Row(a, b) }.asJava, schema)
+      val df = frame(rows)
       assert(ScdCompiler(df, Nil).collect().length == rows.size)
       assert(ScdCompiler(df, Seq(ScdDelete("t", None, 0L))).collect().isEmpty)
     }
